@@ -3,6 +3,7 @@ package graft.api
 import graft.core.{EventTable, VersionedTable}
 import graft.ops.{AsOfJoin, Examples}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.functions._
 
 /** User-facing facade mirroring the reference program's shape
@@ -26,20 +27,10 @@ import org.apache.spark.sql.functions._
   *   "_label_time", target)
   * }}}
   */
-final case class Graft(spark: SparkSession, nativeAsOf: Boolean = true) {
+final case class Graft(spark: SparkSession) {
 
   private val versionedRegistry =
     scala.collection.mutable.Map.empty[String, VersionedTable]
-
-  /** The as-of engine behind [[sql]] and [[pointInTimeJoin]]: the
-    * Catalyst-native merge operator by default ([[AsOfJoin.asofMerge]],
-    * graft.plans), or the union-merge composition with
-    * `Graft(spark, nativeAsOf = false)`. Result-identical (AsOfMergeSpec). */
-  private def asofImpl(
-      probes: DataFrame, key: String, time: String, vt: VersionedTable,
-      inclusive: Boolean = true, joinType: String = "left"): DataFrame =
-    if (nativeAsOf) AsOfJoin.asofMerge(probes, key, time, vt, inclusive, joinType)
-    else AsOfJoin.asof(probes, key, time, vt, inclusive, joinType)
 
   /** Make a versioned table addressable from [[sql]] temporal joins (and
     * as a plain view for ordinary SQL). */
@@ -90,7 +81,7 @@ final case class Graft(spark: SparkSession, nativeAsOf: Boolean = true) {
           if (k1t.equalsIgnoreCase(probe)) k1c
           else if (k2t.equalsIgnoreCase(probe)) k2c
           else throw new IllegalArgumentException(s"ON must reference $probe")
-        val joined = asofImpl(probeDf, probeKey, tCol, vt)
+        val joined = AsOfJoin.asofMerge(probeDf, probeKey, tCol, vt)
         val exprs = selectList.split(",").map(_.trim).flatMap {
           case s if s.equalsIgnoreCase(s"$probe.*") || s == "*" => probeDf.columns.toSeq
           case s =>
@@ -132,13 +123,19 @@ final case class Graft(spark: SparkSession, nativeAsOf: Boolean = true) {
 
   /** Training-example generation (reference: OVER-window + filter,
     * App.java:64-77). `trigger` is a SQL comparison applied to the window
-    * aggregate's value, e.g. "= 2". */
+    * aggregate's value, e.g. "= 2". Events at the same instant are ordered
+    * by the table's remaining orderable columns in schema order (e.g.
+    * `event_id`), so ties never depend on input row order. */
   def examples(
       events: EventTable,
       windowAgg: String,
       lookback: Int,
       trigger: String,
-      labelDelay: String): DataFrame =
+      labelDelay: String): DataFrame = {
+    val fixed = Set(events.timeCol) ++ events.keyCol
+    val tieOrder = events.df.schema.fields.collect {
+      case f if !fixed(f.name) && RowOrdering.isOrderable(f.dataType) => f.name
+    }
     Examples.generate(
       events,
       windowAgg = expr(windowAgg),
@@ -146,7 +143,9 @@ final case class Graft(spark: SparkSession, nativeAsOf: Boolean = true) {
       // Examples.generate names the window aggregate __agg; the trigger
       // fragment compares against it (e.g. "__agg = 2")
       trigger = _ => expr(s"__agg ${trigger.trim}"),
-      labelDelay = labelDelay)
+      labelDelay = labelDelay,
+      orderCols = tieOrder.toSeq)
+  }
 
   /** Event-time point-in-time join (reference: FOR SYSTEM_TIME AS OF,
     * App.java:200-205/228-233). The time axis is a parameter: join the
@@ -158,7 +157,7 @@ final case class Graft(spark: SparkSession, nativeAsOf: Boolean = true) {
       probeKey: String = "_entity",
       inclusive: Boolean = true,
       joinType: String = "left"): DataFrame =
-    asofImpl(probes, probeKey, asOfTime, versioned, inclusive, joinType)
+    AsOfJoin.asofMerge(probes, probeKey, asOfTime, versioned, inclusive, joinType)
 
   /** Changelog view WITH retraction rows of a continuous grouped
     * aggregation over a STREAMING frame (reference: toChangelogStream

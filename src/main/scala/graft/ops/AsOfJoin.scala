@@ -4,7 +4,6 @@ import graft.core.VersionedTable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Event-time as-of join — the engine's flagship primitive, replacing the
   * reference's `FOR SYSTEM_TIME AS OF` temporal joins (App.java:200-205 and
@@ -19,32 +18,30 @@ import org.apache.spark.sql.types.StructType
   * the reference's event-time re-assignment workaround (App.java:207-225)
   * disappears: join #2 on a different time axis is just a second call.
   *
-  * Algorithm (union-merge): tag version rows and probe rows, union them,
-  * and run a single running `last(value, ignoreNulls)` window partitioned by
-  * key and ordered by (time, side). Versions sort before probes at the same
-  * instant, giving inclusive semantics; flip the side order for exclusive.
-  *
-  * Scale rationale: exactly ONE shuffle (by key) and one per-partition sort
-  * over |probes| + |versions| rows — no join explosion, no per-probe-row
-  * row_number repartition, and no broadcast requirement. At 100 TB this is
-  * the canonical merge formulation: cost is a sort-shuffle of both inputs,
-  * identical asymptotics to a sort-merge join, and it is skew-tolerant via
-  * AQE because the heavy key's rows still form a single sorted run.
+  * Two formulations, one semantics:
+  *  - [[asofMerge]] is the engine. The `Graft` facade, `Graft.sql` and
+  *    `q_asof_merge` run it: a logical [[graft.plans.AsOfJoinNode]] planned
+  *    to the co-partitioned two-pointer [[graft.plans.AsOfMergeJoinExec]].
+  *  - [[asof]] is the reference (union-merge over stock window functions).
+  *    It is the oracle the engine is compared against in AsOfMergeSpec,
+  *    AsOfPropertySpec, GoldenFlagshipSpec, PlanSpec and StreamingAsOfSpec.
   */
 object AsOfJoin {
 
-  /** @param left       probe rows (any schema)
+  /** Reference formulation (union-merge): tag version rows and probe rows,
+    * union them, and run a single running `last(value, ignoreNulls)`
+    * window partitioned by key and ordered by (time, side). Versions sort
+    * before probes at the same instant, giving inclusive semantics; flip
+    * the side order for exclusive. Built only from stock Spark operators,
+    * so it serves as the oracle for [[asofMerge]]; production callers use
+    * [[asofMerge]].
+    *
+    * @param left       probe rows (any schema)
     * @param leftKey    probe join key column
     * @param asOfTime   probe column holding the as-of instant
     * @param right      versioned table supplying values
     * @param inclusive  version at exactly asOfTime visible? (reference: yes)
     * @param joinType   "left" (NULL values when no version) or "inner"
-    * @param nullKeyBypass  route NULL-key probes around the shuffle (they
-    *                   can only ever produce NULL values). All NULL keys
-    *                   hash to ONE partition — at scale a few percent of
-    *                   null keys becomes a straggler; the bypass trades a
-    *                   second (IsNull/IsNotNull-pushed) scan of the probe
-    *                   side for eliminating it.
     */
   def asof(
       left: DataFrame,
@@ -52,33 +49,8 @@ object AsOfJoin {
       asOfTime: String,
       right: VersionedTable,
       inclusive: Boolean = true,
-      joinType: String = "left",
-      nullKeyBypass: Boolean = false): DataFrame = {
-    require(Seq("left", "inner").contains(joinType), s"joinType=$joinType")
-    if (nullKeyBypass) {
-      val merged = asofImpl(left.where(col(leftKey).isNotNull), leftKey, asOfTime,
-        right, inclusive, joinType)
-      if (joinType == "inner") return merged // NULL-key probes never match
-      val valueType = right.df.select(struct(right.valueCols.map(col): _*))
-        .schema.head.dataType
-      val nullRows = left.where(col(leftKey).isNull)
-        .withColumn("__asof", lit(null).cast(valueType))
-        .select((left.columns.map(col) ++
-          right.valueCols.map(c => col("__asof").getField(c).as(c))).toSeq: _*)
-      return merged.unionByName(nullRows)
-    }
-    asofImpl(left, leftKey, asOfTime, right, inclusive, joinType)
-  }
-
-  private def asofImpl(
-      left: DataFrame,
-      leftKey: String,
-      asOfTime: String,
-      right: VersionedTable,
-      inclusive: Boolean,
-      joinType: String): DataFrame = {
-    val overlap = right.valueCols.toSet.intersect(left.columns.toSet)
-    require(overlap.isEmpty, s"value columns collide with probe columns: $overlap")
+      joinType: String = "left"): DataFrame = {
+    checkArgs(left, right, joinType)
 
     val probeSide = if (inclusive) 1 else 0 // versions first at equal t <=> inclusive
     val verSide = 1 - probeSide
@@ -98,9 +70,9 @@ object AsOfJoin {
     // NULL-time) version rows must not feed NULL-key probes — without this
     // filter Window.partitionBy(__k) would group them together and a
     // NULL-key probe could pick up a NULL-key version's values, diverging
-    // from the reference's LEFT JOIN ... ON a.k = b.k and from the
-    // nullKeyBypass/asofBroadcast paths. NULL-key probes still flow through
-    // (their partition now holds no versions → NULL values, as required).
+    // from the reference's LEFT JOIN ... ON a.k = b.k and from [[asofMerge]].
+    // NULL-key probes still flow through (their partition now holds no
+    // versions → NULL values, as required).
     val versions = right.df
       .where(col(right.keyCol).isNotNull && col(right.timeCol).isNotNull)
       .select(
@@ -127,58 +99,9 @@ object AsOfJoin {
     kept.select(outCols.toSeq: _*)
   }
 
-  /** Skew-proof formulation: HOT keys (a bot entity with millions of
-    * probes) straggle the one partition that `Window.partitionBy(key)`
-    * hashes them to. Salting splits each key's PROBES across `salts`
-    * partitions — deterministically, by hashing the full probe row — while
-    * the key's VERSION HISTORY replicates to all of them, so every salted
-    * partition still answers its probes exactly. Cost: versions x salts
-    * (versions are the small side; features change rarely relative to
-    * probe volume), bought back as an upper bound of probes/salts per
-    * partition per key. Results are identical to [[asof]] (pinned in
-    * AsOfJoinSpec). NULL-key probes take the bypass union (a struct salt
-    * key would otherwise defeat SQL NULL-equality semantics). */
-  def asofSalted(
-      left: DataFrame,
-      leftKey: String,
-      asOfTime: String,
-      right: VersionedTable,
-      salts: Int,
-      inclusive: Boolean = true,
-      joinType: String = "left"): DataFrame = {
-    require(salts >= 1, s"salts=$salts")
-    require(Seq("left", "inner").contains(joinType), s"joinType=$joinType")
-    if (salts == 1) return asof(left, leftKey, asOfTime, right, inclusive, joinType)
-    val SALT = "__graft_salt"
-    val SK = "__graft_sk"
-    val nonNull = left.where(col(leftKey).isNotNull)
-    val p = nonNull
-      .withColumn(SALT,
-        pmod(xxhash64(nonNull.columns.toIndexedSeq.map(col): _*),
-          lit(salts.toLong)).cast("int"))
-      .withColumn(SK, struct(col(leftKey).as("k"), col(SALT).as("s")))
-    val v = right.df
-      .where(col(right.keyCol).isNotNull && col(right.timeCol).isNotNull)
-      .withColumn(SALT, explode(array((0 until salts).map(i => lit(i)): _*)))
-      .withColumn(SK, struct(col(right.keyCol).as("k"), col(SALT).as("s")))
-    val vt = VersionedTable(v, SK, right.timeCol, right.valueCols)
-    val merged = asofImpl(p, SK, asOfTime, vt, inclusive, joinType)
-      .drop(SALT, SK)
-    if (joinType == "inner") merged
-    else {
-      val valueType = right.df.select(struct(right.valueCols.map(col): _*))
-        .schema.head.dataType
-      val nullRows = left.where(col(leftKey).isNull)
-        .withColumn("__asof", lit(null).cast(valueType))
-        .select((left.columns.map(col) ++
-          right.valueCols.map(c => col("__asof").getField(c).as(c))).toSeq: _*)
-      merged.unionByName(nullRows)
-    }
-  }
-
-  /** Catalyst-native formulation: plans a [[graft.plans.AsOfJoinNode]] that
-    * the injected strategy compiles to [[graft.plans.AsOfMergeJoinExec]] —
-    * hash co-partitioning + per-key (key, time) sort come from
+  /** The engine: plans a [[graft.plans.AsOfJoinNode]] that the injected
+    * strategy compiles to [[graft.plans.AsOfMergeJoinExec]] — hash
+    * co-partitioning + per-key (key, time) sort come from
     * EnsureRequirements (so bucketed/pre-partitioned inputs skip the
     * shuffle entirely, and AQE manages skew), and the join itself is a
     * two-pointer merge per partition. Same semantics as [[asof]] (pinned in
@@ -190,9 +113,7 @@ object AsOfJoin {
       right: VersionedTable,
       inclusive: Boolean = true,
       joinType: String = "left"): DataFrame = {
-    require(Seq("left", "inner").contains(joinType), s"joinType=$joinType")
-    val overlap = right.valueCols.toSet.intersect(left.columns.toSet)
-    require(overlap.isEmpty, s"value columns collide with probe columns: $overlap")
+    checkArgs(left, right, joinType)
     val spark = left.sparkSession
     graft.plans.GraftPlanner.ensure(spark)
     import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
@@ -228,80 +149,9 @@ object AsOfJoin {
     org.apache.spark.sql.GraftSqlBridge.ofRows(spark, node)
   }
 
-  private def toMicros(t: java.sql.Timestamp): Long =
-    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
-
-  /** Broadcast as-of join: when the versioned table is small (dimension-
-    * sized feature tables against petabytes of probes), collect it once,
-    * broadcast per-key time-sorted arrays, and answer each probe with a
-    * binary search inside a mapPartitions pass — ZERO shuffle of the probe
-    * side, no sort, preserving the probes' partitioning for downstream
-    * operators. Same semantics as [[asof]] (verified equal in tests).
-    *
-    * @param maxRows guard against collecting an unexpectedly large table */
-  def asofBroadcast(
-      left: DataFrame,
-      leftKey: String,
-      asOfTime: String,
-      right: VersionedTable,
-      inclusive: Boolean = true,
-      joinType: String = "left",
-      maxRows: Long = 2000000L): DataFrame = {
+  private def checkArgs(left: DataFrame, right: VersionedTable, joinType: String): Unit = {
     require(Seq("left", "inner").contains(joinType), s"joinType=$joinType")
-    val spark = left.sparkSession
-    val nVals = right.valueCols.size
-
-    val versionRows = right.df
-      .select((Seq(col(right.keyCol), col(right.timeCol)) ++ right.valueCols.map(col)): _*)
-      .limit((maxRows + 1).toInt)
-      .collect()
-    require(versionRows.length <= maxRows,
-      s"versioned table exceeds asofBroadcast maxRows=$maxRows; use asof()")
-
-    val byKey: Map[Any, (Array[Long], Array[Array[Any]])] = versionRows
-      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-      .groupBy(_.get(0))
-      .map { case (k, rows) =>
-        val sorted = rows.sortBy(r => toMicros(r.getTimestamp(1)))
-        (k, (sorted.map(r => toMicros(r.getTimestamp(1))),
-          sorted.map(r => Array.tabulate[Any](nVals)(i => r.get(i + 2)))))
-      }
-    val bc = spark.sparkContext.broadcast(byKey)
-
-    val keyIdx = left.schema.fieldIndex(leftKey)
-    val timeIdx = left.schema.fieldIndex(asOfTime)
-    val inclusiveFlag = inclusive
-    val inner = joinType == "inner"
-    val nullValues = Array.fill[Any](nVals)(null)
-
-    val valueFields = {
-      val bySchema = right.df.schema
-      right.valueCols.map(c => bySchema(bySchema.fieldIndex(c)).copy(nullable = true))
-    }
-    val outSchema = org.apache.spark.sql.types.StructType(left.schema.fields ++ valueFields)
-
-    val rdd = left.rdd.mapPartitions { rows =>
-      val m = bc.value
-      rows.flatMap { r =>
-        val vals: Array[Any] =
-          if (r.isNullAt(keyIdx) || r.isNullAt(timeIdx)) nullValues
-          else m.get(r.get(keyIdx)) match {
-            case None => nullValues
-            case Some((times, values)) =>
-              val t = toMicros(r.getAs[java.sql.Timestamp](timeIdx))
-              // rightmost index with times(i) <= t (inclusive) / < t
-              var lo = 0; var hi = times.length - 1; var ans = -1
-              while (lo <= hi) {
-                val mid = (lo + hi) >>> 1
-                val ok = if (inclusiveFlag) times(mid) <= t else times(mid) < t
-                if (ok) { ans = mid; lo = mid + 1 } else hi = mid - 1
-              }
-              if (ans >= 0) values(ans) else nullValues
-          }
-        if (inner && (vals eq nullValues)) Iterator.empty
-        else Iterator.single(org.apache.spark.sql.Row.fromSeq(r.toSeq ++ vals))
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
+    val overlap = right.valueCols.toSet.intersect(left.columns.toSet)
+    require(overlap.isEmpty, s"value columns collide with probe columns: $overlap")
   }
 }

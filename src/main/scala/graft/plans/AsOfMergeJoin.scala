@@ -130,8 +130,9 @@ case class AsOfMergeJoinExec(
   // iterators (WholeStageCodegenExec zips exactly two inputRDDs), the
   // two-pointer merge is generated Java over unboxed longs, and everything
   // ABOVE the join (projections, filters, aggregates) fuses into the same
-  // generated loop via consume(). The generic (boxed-ordering) shape keeps
-  // the interpreted doExecute below.
+  // generated loop via consume(). Everything the generated loop does not
+  // cover (other key types, whole-stage codegen off, codegen fallback)
+  // runs the interpreted doExecute below, which is correct for every type.
 
   override def supportCodegen: Boolean =
     longBacked(leftKey.dataType) && longBacked(leftTime.dataType)
@@ -144,7 +145,7 @@ case class AsOfMergeJoinExec(
   // rows sharing a buffer, unlike a 1:N join's inner emit loop), and
   // within-stage buffering consumers (sort/aggregate) copy on insert as
   // part of their own consume contract. Measured: the copy cost 20M
-  // allocations (~0.3 s) on the AsOfBench BIG case for no correctness gain.
+  // allocations (~0.3 s) on a 20M-probe merge for no correctness gain.
   override def needCopyResult: Boolean = false
 
   override protected def doProduce(ctx: CodegenContext): String = {
@@ -255,10 +256,6 @@ case class AsOfMergeJoinExec(
     val inc = inclusive
     val innerJoin = inner
     val nRight = rOut.length
-    // the overwhelmingly common shape (bigint entity key, timestamp time)
-    // merges over unboxed longs; anything else takes the generic path whose
-    // interpreted orderings allocate a box per comparison
-    val primitive = longBacked(leftKey.dataType) && longBacked(leftTime.dataType)
 
     left.execute().zipPartitions(right.execute()) { (lIter, rIter) =>
       // bind the version side as NULLABLE regardless of its schema: the
@@ -268,110 +265,65 @@ case class AsOfMergeJoinExec(
       val joined = new JoinedRow
       val nullRight: InternalRow = new GenericInternalRow(nRight)
 
-      if (primitive) {
-        // ---- unboxed long merge (key and time read via getLong) ----------
-        var rHas = false
-        var rKey = 0L
-        var rTime = 0L
-        var rRow: InternalRow = null
-        def advanceR(): Unit = {
-          rHas = false
-          while (!rHas && rIter.hasNext) {
-            val row = rIter.next()
-            if (!row.isNullAt(rkIdx) && !row.isNullAt(rtIdx)) {
-              // primitives are safe to read off the live buffer, but the
-              // held row itself must be a copy (the iterator reuses it)
-              rRow = row.copy()
-              rKey = row.getLong(rkIdx)
-              rTime = row.getLong(rtIdx)
-              rHas = true
-            }
+      // interpreted orderings over boxed values: every key/time type
+      val keyOrd = TypeUtils.getInterpretedOrdering(leftKey.dataType)
+      val timeOrd = TypeUtils.getInterpretedOrdering(leftTime.dataType)
+      val rkType = rOut(rkIdx).dataType
+      val rtType = rOut(rtIdx).dataType
+      val lkType = lOut(lkIdx).dataType
+      val ltType = lOut(ltIdx).dataType
+
+      // buffered right cursor; NULL-key / NULL-time versions are inert
+      // under SQL equi-join semantics and skipped outright
+      var rHas = false
+      var rKey: Any = null
+      var rTime: Any = null
+      var rRow: InternalRow = null
+      def advanceR(): Unit = {
+        rHas = false
+        while (!rHas && rIter.hasNext) {
+          val row = rIter.next()
+          if (!row.isNullAt(rkIdx) && !row.isNullAt(rtIdx)) {
+            // copy FIRST and extract key/time from the copy: iterator rows
+            // are reused buffers, and a UTF8String/binary/decimal key read
+            // off the live row would silently mutate after the next next()
+            rRow = row.copy()
+            rKey = rRow.get(rkIdx, rkType)
+            rTime = rRow.get(rtIdx, rtType)
+            rHas = true
           }
         }
-        advanceR()
-        var heldValid = false
-        var heldKey = 0L
-        var heldRow: InternalRow = null
-        lIter.flatMap { lRow =>
-          if (lRow.isNullAt(lkIdx) || lRow.isNullAt(ltIdx)) {
-            if (innerJoin) Iterator.empty
-            else Iterator.single(proj(joined(lRow, nullRight)))
-          } else {
-            val pKey = lRow.getLong(lkIdx)
-            val pTime = lRow.getLong(ltIdx)
-            while (rHas && rKey < pKey) advanceR()
-            while (rHas && rKey == pKey &&
-                (if (inc) rTime <= pTime else rTime < pTime)) {
-              heldValid = true; heldKey = rKey; heldRow = rRow
-              advanceR()
-            }
-            val matched = heldValid && heldKey == pKey
-            if (matched) Iterator.single(proj(joined(lRow, heldRow)))
-            else if (innerJoin) Iterator.empty
-            else Iterator.single(proj(joined(lRow, nullRight)))
-          }
-        }
-      } else {
-        // ---- generic merge (interpreted orderings over boxed values) -----
-        val keyOrd = TypeUtils.getInterpretedOrdering(leftKey.dataType)
-        val timeOrd = TypeUtils.getInterpretedOrdering(leftTime.dataType)
-        val rkType = rOut(rkIdx).dataType
-        val rtType = rOut(rtIdx).dataType
-        val lkType = lOut(lkIdx).dataType
-        val ltType = lOut(ltIdx).dataType
+      }
+      advanceR()
 
-        // buffered right cursor; NULL-key / NULL-time versions are inert
-        // under SQL equi-join semantics and skipped outright
-        var rHas = false
-        var rKey: Any = null
-        var rTime: Any = null
-        var rRow: InternalRow = null
-        def advanceR(): Unit = {
-          rHas = false
-          while (!rHas && rIter.hasNext) {
-            val row = rIter.next()
-            if (!row.isNullAt(rkIdx) && !row.isNullAt(rtIdx)) {
-              // copy FIRST and extract key/time from the copy: iterator rows
-              // are reused buffers, and a UTF8String/binary/decimal key read
-              // off the live row would silently mutate after the next next()
-              rRow = row.copy()
-              rKey = rRow.get(rkIdx, rkType)
-              rTime = rRow.get(rtIdx, rtType)
-              rHas = true
-            }
-          }
-        }
-        advanceR()
+      // latest version already consumed (valid while its key matches)
+      var heldValid = false
+      var heldKey: Any = null
+      var heldRow: InternalRow = null
 
-        // latest version already consumed (valid while its key matches)
-        var heldValid = false
-        var heldKey: Any = null
-        var heldRow: InternalRow = null
-
-        lIter.flatMap { lRow =>
-          if (lRow.isNullAt(lkIdx) || lRow.isNullAt(ltIdx)) {
-            // NULL-key (or NULL as-of time) probe: never matches
-            if (innerJoin) Iterator.empty
-            else Iterator.single(proj(joined(lRow, nullRight)))
-          } else {
-            val pKey = lRow.get(lkIdx, lkType)
-            val pTime = lRow.get(ltIdx, ltType)
-            // drop versions for keys already passed
-            while (rHas && keyOrd.compare(rKey, pKey) < 0) advanceR()
-            // consume versions visible at pTime; last one wins (equal change
-            // instants: later stream position wins, same as the window form)
-            while (rHas && keyOrd.compare(rKey, pKey) == 0 && {
-                val c = timeOrd.compare(rTime, pTime)
-                if (inc) c <= 0 else c < 0
-              }) {
-              heldValid = true; heldKey = rKey; heldRow = rRow
-              advanceR()
-            }
-            val matched = heldValid && keyOrd.compare(heldKey, pKey) == 0
-            if (matched) Iterator.single(proj(joined(lRow, heldRow)))
-            else if (innerJoin) Iterator.empty
-            else Iterator.single(proj(joined(lRow, nullRight)))
+      lIter.flatMap { lRow =>
+        if (lRow.isNullAt(lkIdx) || lRow.isNullAt(ltIdx)) {
+          // NULL-key (or NULL as-of time) probe: never matches
+          if (innerJoin) Iterator.empty
+          else Iterator.single(proj(joined(lRow, nullRight)))
+        } else {
+          val pKey = lRow.get(lkIdx, lkType)
+          val pTime = lRow.get(ltIdx, ltType)
+          // drop versions for keys already passed
+          while (rHas && keyOrd.compare(rKey, pKey) < 0) advanceR()
+          // consume versions visible at pTime; last one wins (equal change
+          // instants: later stream position wins, same as the window form)
+          while (rHas && keyOrd.compare(rKey, pKey) == 0 && {
+              val c = timeOrd.compare(rTime, pTime)
+              if (inc) c <= 0 else c < 0
+            }) {
+            heldValid = true; heldKey = rKey; heldRow = rRow
+            advanceR()
           }
+          val matched = heldValid && keyOrd.compare(heldKey, pKey) == 0
+          if (matched) Iterator.single(proj(joined(lRow, heldRow)))
+          else if (innerJoin) Iterator.empty
+          else Iterator.single(proj(joined(lRow, nullRight)))
         }
       }
     }

@@ -122,8 +122,14 @@ object StreamingFlagship {
     val (next, out) = emitMatured(s, key, wmUs)
     if (next.pending.nonEmpty) {
       state.update(next)
-      // ceil micros -> ms so the timeout's watermark covers the label time
-      state.setTimeoutTimestamp(Math.floorDiv(next.pending.map(_.labelUs).min + 999L, 1000L))
+      // An event-time timeout fires once the watermark is strictly past it,
+      // while emitMatured accepts label <= watermark. So set it one ms
+      // before the first ms watermark that covers the label: the example
+      // then emits at the same watermark whether or not its key has input
+      // in that batch. Never earlier than the current watermark, because
+      // every pending label is > watermark.
+      state.setTimeoutTimestamp(
+        Math.floorDiv(next.pending.map(_.labelUs).min + 999L, 1000L) - 1L)
     } else if (next.lastWasError || next.purchaseBase > 0 || next.purchaseTs.nonEmpty ||
       next.errCents > 0) {
       state.update(next)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import graft.core.{EventTable, VersionedTable}
-import graft.ops.{AsOfJoin, Examples}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -21,40 +19,26 @@ object Demo {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val events = EventTable(
-      graft.sources.Tables.events(spark, sfDir), "ts", Some("user_id"))
-
-    // Example generation: two consecutive error events for a user.
-    val examples = Examples.generate(
-      events,
-      windowAgg = count(when(col("event_type") === "error", lit(1))),
-      lookback = 1,
-      trigger = _ === 2,
-      labelDelay = "INTERVAL 1 HOUR",
-      orderCols = Seq("event_id"))
-
-    // Feature: cumulative error value per user; target: cumulative purchases.
-    val features = VersionedTable.fromEvents(
-      events.where(col("event_type") === "error"), "user_id",
-      sum(col("value")) -> "err_value")
-    val target = VersionedTable.fromEvents(
-      events.where(col("event_type") === "purchase"), "user_id",
-      count(lit(1)) -> "purchases")
-
-    val out = AsOfJoin.asof(
-      AsOfJoin.asof(examples, "_entity", "_prediction_time", features),
-      "_entity", "_label_time", target)
-
+    // The reference pipeline through the facade: examples on two
+    // consecutive error events, then as-of features and as-of target.
+    val g = graft.api.Graft(spark)
+    val events = g.events("events_v", graft.sources.Tables.events(spark, sfDir),
+      time = "ts", key = "user_id")
+    val examples = g.examples(events,
+      windowAgg = "count(CASE WHEN event_type = 'error' THEN 1 END)", lookback = 1,
+      trigger = "= 2", labelDelay = "INTERVAL 1 HOUR")
+    val features = g.versionedWhere(events, "event_type = 'error'",
+      "sum(cast(round(value*100) as bigint))" -> "err_cents")
+    val target = g.versionedWhere(events, "event_type = 'purchase'", "count(1)" -> "purchases")
+    val out = g.pointInTimeJoin(
+      g.pointInTimeJoin(examples, "_prediction_time", features),
+      "_label_time", target)
     println(s"[demo] examples=${examples.count()} joined=${out.count()}")
     out.orderBy("_prediction_time").show(10, truncate = false)
     out.explain("formatted")
 
-    // Facade surface: the reference's program shape + its temporal-join SQL.
-    val g = graft.api.Graft(spark)
-    val ev2 = g.events("events_v", events.df, time = "ts", key = "user_id")
-    g.registerVersioned("ErrFeatures",
-      g.versionedWhere(ev2, "event_type = 'error'",
-        "sum(cast(round(value*100) as bigint))" -> "err_cents"))
+    // The same temporal join in the reference's SQL syntax.
+    g.registerVersioned("ErrFeatures", features)
     g.sql("SELECT user_id AS _entity, ts AS _prediction_time FROM events_v WHERE event_type = 'purchase'")
       .createOrReplaceTempView("probes")
     val viaSql = g.sql("""
@@ -64,14 +48,6 @@ object Demo {
       ON probes._entity = f._entity""")
     println(s"[demo] facade temporal-join rows=${viaSql.count()}")
     viaSql.orderBy("_prediction_time").show(3, truncate = false)
-
-    // Catalyst-native as-of: same semantics through the custom operator
-    // (AsOfJoinNode -> AsOfMergeJoinExec); plan shows the merge exec.
-    val native = AsOfJoin.asofMerge(
-      AsOfJoin.asofMerge(examples, "_entity", "_prediction_time", features),
-      "_entity", "_label_time", target)
-    println(s"[demo] native as-of merge rows=${native.count()}" +
-      s" (plan has AsOfMergeJoin: ${native.queryExecution.executedPlan.toString.contains("AsOfMergeJoin")})")
 
     // Quantized similarity search: SQ8 + exact re-rank over embeddings.
     val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")
@@ -83,8 +59,7 @@ object Demo {
 
     // Big-corpus ANN through the facade: IVF x PQ residual composition
     // (sqrt(n)-scaled cells, 8 B codes, ADC + exact re-rank).
-    val g2 = graft.api.Graft(spark)
-    val ann = g2.approxNearestNeighbors(emb, col("vec_id") < 3, k = 3)
+    val ann = g.approxNearestNeighbors(emb, col("vec_id") < 3, k = 3)
     println(s"[demo] ivfpq ann rows=${ann.count()}")
 
     // Inverted multi-index: k^2 cells from 2k per-half centroids.
@@ -95,22 +70,22 @@ object Demo {
     // Near-dup clusters through the facade (MinHash-LSH + connected
     // components), keep-one-per-cluster.
     val docs = graft.sources.Tables.load(spark, sfDir, "documents")
-    val clusters = g2.duplicateClusters(docs, 0.7)
+    val clusters = g.duplicateClusters(docs, 0.7)
     println(s"[demo] dup clusters: keep=${clusters.where(col("keep")).count()}" +
       s" of ${clusters.count()} docs")
 
     // Round-6 corpus-hygiene surface: chunk dedup, boilerplate filter,
     // containment, decontamination, OPQ-rotated ANN.
     println(s"[demo] chunk-dup docs=" +
-      s"${g2.chunkDedup(docs).where(col("n_dup_chunks") > 0).count()}")
+      s"${g.chunkDedup(docs).where(col("n_dup_chunks") > 0).count()}")
     println(s"[demo] boilerplate keep=" +
-      s"${g2.boilerplateFilter(docs).where(col("keep")).count()}")
+      s"${g.boilerplateFilter(docs).where(col("keep")).count()}")
     println(s"[demo] containment pairs=" +
-      s"${g2.containmentPairs(docs, 0.8).count()}")
+      s"${g.containmentPairs(docs, 0.8).count()}")
     println(s"[demo] decontaminate flagged=" +
-      s"${g2.decontaminate(docs, col("doc_id") < 25).where(col("contaminated")).count()}")
+      s"${g.decontaminate(docs, col("doc_id") < 25).where(col("contaminated")).count()}")
     println(s"[demo] ivf-opq ann rows=" +
-      s"${g2.approxNearestNeighborsOpq(emb, col("vec_id") < 3, k = 3).count()}")
+      s"${g.approxNearestNeighborsOpq(emb, col("vec_id") < 3, k = 3).count()}")
 
     // Round-7 on-ingest hygiene: decontamination scoring on a doc stream
     // (stateless append mode) and containment against a static index.
@@ -119,7 +94,7 @@ object Demo {
       val docStream = spark.readStream.schema(docSchema)
         .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
       val deconOut = graft.streaming.StreamingOps.runToParquet(
-        g2.decontaminateOnIngest(
+        g.decontaminateOnIngest(
           docStream.where(col("doc_id") >= 25), docs.where(col("doc_id") < 25)),
         "demo_stream_decon")
       println(s"[demo] stream decontaminate flagged=" +
@@ -128,7 +103,7 @@ object Demo {
       val docStream2 = spark.readStream.schema(docSchema)
         .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
       println(s"[demo] stream containment pairs=" +
-        s"${g2.containmentOnIngest(docStream2, index, 0.8).count()}")
+        s"${g.containmentOnIngest(docStream2, index, 0.8).count()}")
       index.release()
     }
 
@@ -228,10 +203,10 @@ object Demo {
     // +I on first value per key, -U/+U pairs on change; print-sink shape.
     val clStream = graft.sources.Tables.eventsStream(spark, sfDir)
       .where(col("event_type") === "purchase")
-    val cl = g2.changelog(clStream, "ts", "0 seconds", Seq("user_id"),
+    val cl = g.changelog(clStream, "ts", "0 seconds", Seq("user_id"),
       "count(1)" -> "purchases")
     println(s"[demo] changelog rows=${cl.count()} " +
-      s"(replayed keys=${g2.replayChangelog(cl, Seq("user_id")).count()})")
+      s"(replayed keys=${g.replayChangelog(cl, Seq("user_id")).count()})")
     cl.orderBy("batch_id", "user_id", "op").show(5, truncate = false)
     spark.stop()
   }

@@ -81,72 +81,11 @@ class AsOfJoinSpec extends AnyFunSuite with SparkSpec {
     assert(a === b)
   }
 
-  test("asofBroadcast equals the union-merge asof (left and inner, both boundaries)") {
-    val p = probes(("00:30", "k1"), ("01:00", "k1"), ("02:30", "k1"),
-      ("04:00", "k1"), ("01:30", "k2"), ("09:00", "zz"))
-    for (inc <- Seq(true, false); jt <- Seq("left", "inner")) {
-      val viaShuffle = AsOfJoin.asof(p, "k", "t", versions(), inc, jt)
-        .collect().map(_.toSeq).toSet
-      val viaBroadcast = AsOfJoin.asofBroadcast(p, "k", "t", versions(), inc, jt)
-        .collect().map(_.toSeq).toSet
-      assert(viaShuffle === viaBroadcast, s"inclusive=$inc joinType=$jt")
-    }
-  }
-
-  test("nullKeyBypass routes NULL-key probes around the shuffle with equal results") {
-    import spark.implicits._
-    val p = Seq((ts("02:00"), "k1"), (ts("02:00"), null), (ts("04:00"), null))
-      .toDF("t", "k")
-    val plain = AsOfJoin.asof(p, "k", "t", versions()).collect().map(_.toSeq).toSet
-    val bypass = AsOfJoin.asof(p, "k", "t", versions(), nullKeyBypass = true)
-      .collect().map(_.toSeq).toSet
-    assert(plain === bypass)
-    assert(bypass.size === 3)
-    val inner = AsOfJoin.asof(p, "k", "t", versions(), joinType = "inner",
-      nullKeyBypass = true).collect()
-    assert(inner.length === 1)
-  }
-
-  test("asofSalted equals asof on every boundary/joinType combo, incl. NULL keys") {
-    import spark.implicits._
-    val p = Seq(
-      (ts("00:30"), Option("k1")), (ts("01:00"), Option("k1")),
-      (ts("02:30"), Option("k1")), (ts("04:00"), Option("k1")),
-      (ts("01:30"), Option("k2")), (ts("09:00"), Option("zz")),
-      (ts("02:00"), Option.empty[String])).toDF("t", "k")
-    for (inc <- Seq(true, false); jt <- Seq("left", "inner"); salts <- Seq(1, 3, 7)) {
-      val plain = AsOfJoin.asof(p, "k", "t", versions(), inc, jt)
-        .collect().map(_.toSeq).toSet
-      val salted = AsOfJoin.asofSalted(p, "k", "t", versions(), salts, inc, jt)
-        .collect().map(_.toSeq).toSet
-      assert(plain === salted, s"inclusive=$inc joinType=$jt salts=$salts")
-    }
-  }
-
-  test("asofSalted equals asof on real events (hot-key shape, both time axes)") {
-    import org.apache.spark.sql.functions._
-    val sfDir = "/root/testdata/sf0.001"
-    val events = graft.core.EventTable(
-      graft.sources.Tables.events(spark, sfDir), "ts", Some("user_id"))
-    val features = graft.core.VersionedTable.fromEvents(
-      events.where(col("event_type") === "error"), "user_id",
-      sum(expr("cast(round(value * 100) as bigint)")) -> "err_cents")
-    // every purchase probes — user activity is naturally skewed
-    val probes = events.df.where(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"))
-    val plain = AsOfJoin.asof(probes, "user_id", "ts", features)
-      .collect().map(_.toSeq).toSet
-    val salted = AsOfJoin.asofSalted(probes, "user_id", "ts", features, salts = 8)
-      .collect().map(_.toSeq).toSet
-    assert(plain === salted)
-    assert(plain.nonEmpty)
-  }
-
-  test("NULL-key / NULL-time version rows never match any probe, on every path") {
+  test("NULL-key / NULL-time version rows never match any probe") {
     import spark.implicits._
     // SQL equi-join semantics: a NULL join key matches nothing, and a
     // version with no change time is undefined — both rows must be inert.
-    // Regression for the versions-side isNotNull filter in asofImpl: without
+    // Regression for the versions-side isNotNull filter in asof: without
     // it, Window.partitionBy(__k) groups NULL-key versions WITH NULL-key
     // probes and 99 would leak into the NULL-key probe's values.
     val vdf = Seq(
@@ -159,10 +98,6 @@ class AsOfJoinSpec extends AnyFunSuite with SparkSpec {
       .toDF("t", "k")
     def run(df: DataFrame) = df.collect().map(_.toSeq).toSet
     val plain = run(AsOfJoin.asof(p, "k", "t", vt))
-    val bypass = run(AsOfJoin.asof(p, "k", "t", vt, nullKeyBypass = true))
-    val bcast = run(AsOfJoin.asofBroadcast(p, "k", "t", vt))
-    assert(plain === bypass)
-    assert(plain === bcast)
     // k1 sees 10 (not the NULL-time 77); the NULL-key probe survives (LEFT)
     // with NULL values (not the NULL-key version's 99)
     assert(plain === Set(

@@ -282,4 +282,39 @@ class AsOfMergeSpec extends AnyFunSuite with SparkSpec {
         s"string-keyed merge join must fall back to interpreted:\n$planS")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
+
+  test("whole-stage codegen off: long keys take the interpreted merge and equal asof") {
+    import spark.implicits._
+    val prev = spark.conf.get("spark.sql.codegen.wholeStage")
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    try {
+      val vdf = Seq(
+        (Option(ts("01:00")), Option(1L), 10L),
+        (Option(ts("02:00")), Option(1L), 20L),
+        (Option(ts("03:00")), Option(1L), 30L),
+        (Option(ts("01:30")), Option(2L), 5L),
+        (Option(ts("01:00")), Option.empty[Long], 99L),
+        (Option.empty[java.sql.Timestamp], Option(2L), 77L)
+      ).toDF("_change_time", "_entity", "v")
+      val vt = VersionedTable(vdf, "_entity", "_change_time", Seq("v"))
+      val p = Seq(
+        (Option(ts("00:30")), Option(1L)), (Option(ts("01:00")), Option(1L)),
+        (Option(ts("02:00")), Option(1L)), (Option(ts("02:30")), Option(1L)),
+        (Option(ts("04:00")), Option(1L)), (Option(ts("01:30")), Option(2L)),
+        (Option(ts("09:00")), Option(3L)), (Option(ts("02:00")), Option.empty[Long]),
+        (Option.empty[java.sql.Timestamp], Option(1L))
+      ).toDF("t", "k")
+      for (inc <- Seq(true, false); jt <- Seq("left", "inner")) {
+        val df = AsOfJoin.asofMerge(p, "k", "t", vt, inc, jt)
+        val plan = df.queryExecution.executedPlan.toString
+        assert(plan.linesIterator.exists(l =>
+          l.contains("AsOfMergeJoin") && !l.contains("*(")),
+          s"merge join must run interpreted with codegen off:\n$plan")
+        val expected = AsOfJoin.asof(p, "k", "t", vt, inc, jt)
+          .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+        val got = df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+        assert(got === expected, s"inclusive=$inc joinType=$jt")
+      }
+    } finally spark.conf.set("spark.sql.codegen.wholeStage", prev)
+  }
 }

@@ -49,28 +49,49 @@ class AsOfPropertySpec extends AnyFunSuite with SparkSpec {
     VersionedTable.fromEvents(
       EventTable(toDf(evs), "ts", Some("k")), "k", sum(col("v")) -> "s")
 
-  private def asofResult(evs: List[Ev], ps: List[(Int, String)]): Set[Seq[Any]] =
-    AsOfJoin.asof(probesDf(ps), "pk", "t", features(evs))
+  /** The engine and the reference; every property must hold for both. */
+  private type Formulation =
+    (DataFrame, String, String, VersionedTable, Boolean, String) => DataFrame
+  private val formulations: Seq[(String, Formulation)] = Seq(
+    "asof" -> (AsOfJoin.asof(_, _, _, _, _, _)),
+    "asofMerge" -> (AsOfJoin.asofMerge(_, _, _, _, _, _)))
+
+  /** Stock Spark's backward `Dataset.joinAsOf`, projected to the engines'
+    * output shape: an engine-independent third reference. */
+  private def sparkJoinAsOf(
+      p: DataFrame, pKey: String, pTime: String, vt: VersionedTable,
+      inclusive: Boolean, joinType: String): DataFrame =
+    org.apache.spark.sql.JoinAsOfBridge.joinAsOf(p, vt.df, pTime, vt.timeCol, pKey, vt.keyCol,
+      joinType, allowExactMatches = inclusive)
+      .select((p.columns ++ vt.valueCols).toIndexedSeq.map(col): _*)
+
+  /** Rows with their multiplicities. */
+  private def bag(df: DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.size }
+
+  private def asofResult(
+      f: Formulation, evs: List[Ev], ps: List[(Int, String)]): Set[Seq[Any]] =
+    f(probesDf(ps), "pk", "t", features(evs), true, "left")
       .collect().map(_.toSeq).toSet
 
   private val seeds = 1L to 6L
 
   test("point-in-time immutability: appending strictly-later events never changes asOf") {
-    for (seed <- seeds) {
+    for ((name, f) <- formulations; seed <- seeds) {
       val evs = sample(evGen, seed)
       val ps = sample(probeGen, seed + 100)
       val tMax = ps.map(_._1).max
       val later = sample(evGen, seed + 200).map(e => e.copy(tsMin = tMax + 1 + e.tsMin))
-      assert(asofResult(evs, ps) === asofResult(evs ++ later, ps),
-        s"seed=$seed: later events changed an earlier asOf")
+      assert(asofResult(f, evs, ps) === asofResult(f, evs ++ later, ps),
+        s"$name seed=$seed: later events changed an earlier asOf")
     }
   }
 
   test("no temporal leakage: asOf(k, t) equals the feature query on the prefix ts <= t") {
-    for (seed <- seeds) {
+    for ((name, f) <- formulations; seed <- seeds) {
       val evs = sample(evGen, seed)
       val ps = sample(probeGen, seed + 100)
-      val got = AsOfJoin.asof(probesDf(ps), "pk", "t", features(evs))
+      val got = f(probesDf(ps), "pk", "t", features(evs), true, "left")
         .collect()
         .map(r => (r.getTimestamp(0), r.getString(1), if (r.isNullAt(2)) None else Some(r.getLong(2))))
         .toSet
@@ -80,35 +101,47 @@ class AsOfPropertySpec extends AnyFunSuite with SparkSpec {
         (new java.sql.Timestamp(t * 60000L), k,
           if (prefix.isEmpty) None else Some(prefix.map(_.value.toLong).sum))
       }.toSet
-      assert(got === exp, s"seed=$seed")
+      assert(got === exp, s"$name seed=$seed")
     }
   }
 
   test("order insensitivity: shuffling input row order never changes results") {
-    for (seed <- seeds) {
+    for ((name, f) <- formulations; seed <- seeds) {
       val evs = sample(evGen, seed)
       val ps = sample(probeGen, seed + 100)
       val shuffled = new scala.util.Random(seed).shuffle(evs)
-      assert(asofResult(evs, ps) === asofResult(shuffled, ps), s"seed=$seed")
+      assert(asofResult(f, evs, ps) === asofResult(f, shuffled, ps), s"$name seed=$seed")
     }
   }
 
   test("inclusive/exclusive boundary relation: exclusive == inclusive at t - epsilon") {
-    for (seed <- seeds) {
+    for ((name, f) <- formulations; seed <- seeds) {
       val evs = sample(evGen, seed)
       val ps = sample(probeGen, seed + 100)
-      val exclusive = AsOfJoin.asof(probesDf(ps), "pk", "t", features(evs), inclusive = false)
+      val exclusive = f(probesDf(ps), "pk", "t", features(evs), false, "left")
         .collect().map(r => (r.getString(1), r.getTimestamp(0),
           if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSet
       // shift probes back one microsecond and use inclusive semantics
       import spark.implicits._
       val shifted = ps.map(p => (new java.sql.Timestamp(p._1 * 60000L - 1L), p._2, p._1))
         .toDF("t", "pk", "orig")
-      val viaShift = AsOfJoin.asof(shifted, "pk", "t", features(evs))
+      val viaShift = f(shifted, "pk", "t", features(evs), true, "left")
         .collect().map(r => (r.getString(1),
           new java.sql.Timestamp(r.getInt(2) * 60000L),
           if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSet
-      assert(exclusive === viaShift, s"seed=$seed")
+      assert(exclusive === viaShift, s"$name seed=$seed")
+    }
+  }
+
+  test("both formulations equal stock Spark joinAsOf on both boundaries and join types") {
+    for (seed <- seeds; inclusive <- Seq(true, false); joinType <- Seq("left", "inner")) {
+      val ps = probesDf(sample(probeGen, seed + 100))
+      val vt = features(sample(evGen, seed))
+      val expected = bag(sparkJoinAsOf(ps, "pk", "t", vt, inclusive, joinType))
+      assert(expected.nonEmpty, s"seed=$seed: empty reference")
+      for ((name, f) <- formulations)
+        assert(bag(f(ps, "pk", "t", vt, inclusive, joinType)) === expected,
+          s"$name seed=$seed inclusive=$inclusive joinType=$joinType")
     }
   }
 }

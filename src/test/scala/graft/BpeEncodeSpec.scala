@@ -1,6 +1,10 @@
 package graft
 
 import graft.ext.TextOps
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -57,11 +61,13 @@ class BpeEncodeSpec extends AnyFunSuite with SparkSpec {
     val exec = graft.ext.TextOps.bpeEncode(docs, k = 2)
       .queryExecution.executedPlan
     val plan = exec.toString()
-    val keyExchanges = exec.collect {
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-        if !e.outputPartitioning.isInstanceOf[
-          org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning] => e
-    }
+    // recurse into AQE: an AdaptiveSparkPlanExec is a leaf to collect()
+    def exchanges(p: SparkPlan): Seq[ShuffleExchangeExec] = p.collect {
+      case e: ShuffleExchangeExec => Seq(e)
+      case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
+    }.flatten
+    val keyExchanges = exchanges(exec).filterNot(
+      _.outputPartitioning.isInstanceOf[RoundRobinPartitioning])
     assert(keyExchanges.isEmpty, s"encode plan shuffles on a key:\n$plan")
     assert(!plan.contains("Join"), s"encode plan joins:\n$plan")
   }

@@ -15,6 +15,13 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
+  /** Every node of a physical plan, looking inside AQE: collect() alone
+    * stops at an AdaptiveSparkPlanExec, which is a leaf. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case _ => p +: p.children.flatMap(nodes)
+  }
+
   private def planString(name: String): String = {
     val df = graft.queries.Registry.queries(name)(spark, sfDir)
     df.queryExecution.executedPlan.toString
@@ -88,15 +95,7 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       Seq((ts("01:00"), "k1", 1L)).toDF("_change_time", "_entity", "v"),
       "_entity", "_change_time", Seq("v"))
     val joined = AsOfJoin.asof(probes, "k", "t", versions)
-    def countShuffles(p: SparkPlan): Int = {
-      val self = p match {
-        case _: ShuffleExchangeExec => 1
-        case a: AdaptiveSparkPlanExec => countShuffles(a.executedPlan)
-        case _ => 0
-      }
-      self + p.children.map(countShuffles).sum
-    }
-    val n = countShuffles(joined.queryExecution.executedPlan)
+    val n = nodes(joined.queryExecution.executedPlan).count(_.isInstanceOf[ShuffleExchangeExec])
     assert(n === 1, joined.queryExecution.executedPlan.toString.take(3000))
   }
 
@@ -107,14 +106,16 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     val centroids = graft.ext.IvfKMeans.trainCentroids(emb, k = 8, sampleN = 256)
     val assigned = graft.ext.IvfKMeans.assignCells(emb, centroids)
     val aPlan = assigned.queryExecution.executedPlan
-    assert(aPlan.collect { case e: ShuffleExchangeExec => e }.isEmpty, aPlan.toString.take(2000))
+    assert(nodes(aPlan).collect { case e: ShuffleExchangeExec => e }.isEmpty,
+      aPlan.toString.take(2000))
     assert(aPlan.toString.contains("graft_ivf_cell"), "kernel expression not in plan")
 
     val opq = graft.ext.Opq.train(emb, sampleN = 256)
     val rotated = emb.select(col("vec_id"),
       graft.ext.Opq.rotate(opq, col("embedding").cast("array<double>")).as("rv"))
     val rPlan = rotated.queryExecution.executedPlan
-    assert(rPlan.collect { case e: ShuffleExchangeExec => e }.isEmpty, rPlan.toString.take(2000))
+    assert(nodes(rPlan).collect { case e: ShuffleExchangeExec => e }.isEmpty,
+      rPlan.toString.take(2000))
     // "*(n)" marks a WholeStageCodegen span in the simple plan string
     assert(rPlan.toString.contains("*(1) Project"), "rotation fell out of codegen: " +
       rPlan.toString.take(500))
@@ -126,7 +127,7 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     val model = graft.ext.IvfPq.train(emb, kCells = 8, sampleN = 256)
     val encoded = graft.ext.IvfPq.encode(emb, model)
     val plan = encoded.queryExecution.executedPlan
-    assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+    assert(nodes(plan).collect { case e: ShuffleExchangeExec => e }.isEmpty,
       "encode must not shuffle: " + plan.toString.take(2000))
     val s = plan.toString
     assert(s.contains("graft_pq_encode") && s.contains("graft_ivf_cell"), s.take(2000))
@@ -139,7 +140,7 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     // scoring = scan -> project(kernel) -> filter; the model build ran
     // eagerly in separate bounded actions, so the SCORING plan must have
     // no join and no aggregate
-    assert(plan.collect {
+    assert(nodes(plan).collect {
       case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
     }.isEmpty, "scoring must not join: " + plan.toString.take(1500))
     val s = plan.toString
@@ -157,7 +158,7 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     // the only exchange allowed is the round-robin spread that lifts a
     // single-row-group local scan to core parallelism (no-op at scale);
     // any KEY exchange would mean the kernel stopped being per-row
-    assert(plan.collect { case e: ShuffleExchangeExec
+    assert(nodes(plan).collect { case e: ShuffleExchangeExec
         if !e.outputPartitioning.isInstanceOf[
           org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning] => e
       }.isEmpty,
